@@ -18,7 +18,6 @@ Design rules (see SURVEY.md §7):
 
 from cdc_makanmana_spark.engine import MakanmanaEngine
 from cdc_makanmana_spark.session import get_spark
-from cdc_makanmana_spark.tables import load_tables
 
-__all__ = ["MakanmanaEngine", "get_spark", "load_tables"]
+__all__ = ["MakanmanaEngine", "get_spark"]
 __version__ = "0.1.0"

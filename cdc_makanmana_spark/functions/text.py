@@ -162,43 +162,3 @@ def doc_fingerprint(col: Column | str) -> Column:
     # Explicit class (not \s): Java \s has \x0B, RE2 \s does not.
     normalized = F.trim(F.regexp_replace(F.lower(c), r"[ \t\n\r\f\x0B]+", " "))
     return F.md5(F.encode(normalized, "UTF-8"))
-
-
-def winnowing_fingerprints(
-    col: Column | str, k: int = 5, window: int = 4, gram_hash: str = "xxhash64"
-) -> Column:
-    """Winnowing fingerprint set (rolling-hash document fingerprinting,
-    the MOSS scheme): hash every word k-gram, then keep the minimum
-    hash of each sliding window of ``window`` consecutive k-gram
-    hashes. Guarantees: any shared run of >= k + window - 1 words
-    between two documents shares at least one selected fingerprint —
-    partial-overlap detection, where ``doc_fingerprint`` only catches
-    whole-document equality.
-
-    Returns a sorted distinct array<long>. Sharing-detection is then a
-    standard blocked self-join on the exploded fingerprints (identical
-    machinery to the shingle join in operators/dedup.py, and the same
-    skew cap applies).
-
-    ``gram_hash``: "xxhash64" (JVM-native, the scale path) or "md5_64"
-    (md5-derived 64-bit hash, bit-identical across engines — lets the
-    DuckDB oracle replay the fingerprint selection; same trade as
-    ``simhash_buckets``'s token_hash).
-    """
-    from cdc_makanmana_spark.operators.dedup import md5_hash64
-
-    c = F.col(col) if isinstance(col, str) else col
-    # Explicit class (not \s): Java \s has \x0B, RE2 \s does not.
-    words = F.split(F.trim(F.regexp_replace(F.lower(c), r"[ \t\n\r\f\x0B]+", " ")), " ")
-    hash_fn = md5_hash64 if gram_hash == "md5_64" else F.xxhash64
-    n_grams = F.greatest(F.size(words) - (k - 1), F.lit(1))
-    grams = F.transform(
-        F.sequence(F.lit(1), n_grams),
-        lambda i: hash_fn(F.array_join(F.slice(words, i, k), " ")),
-    )
-    n_windows = F.greatest(F.size(grams) - (window - 1), F.lit(1))
-    mins = F.transform(
-        F.sequence(F.lit(1), n_windows),
-        lambda i: F.array_min(F.slice(grams, i, window)),
-    )
-    return F.array_sort(F.array_distinct(mins))

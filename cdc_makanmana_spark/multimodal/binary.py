@@ -894,7 +894,7 @@ def video_near_duplicates_dir(
     (see its docstring) — this function returns a lazy pairing plan
     over an already-computed frame-hash table, not a fully lazy
     DataFrame."""
-    from cdc_makanmana_spark.operators.dedup import materialize
+    from cdc_makanmana_spark.session import materialize
 
     return _shared_frame_pairs(
         materialize(

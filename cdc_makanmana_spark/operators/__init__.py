@@ -15,10 +15,8 @@ from cdc_makanmana_spark.operators.dedup import (
     connected_components,
     contamination_hits,
     decontaminate,
-    dedup_against_corpus,
     dedup_exact,
     dedup_keep_best,
-    materialize,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_buckets,
@@ -46,7 +44,6 @@ __all__ = [
     "connected_components",
     "contamination_hits",
     "decontaminate",
-    "dedup_against_corpus",
     "dedup_keep_best",
     "embedding_near_duplicates",
     "embedding_near_duplicates_by_block",
@@ -62,7 +59,6 @@ __all__ = [
     "similarity_join",
     "word_similarity_ratio",
     "dedup_exact",
-    "materialize",
     "minhash_near_duplicates",
     "ngram_jaccard_pairs",
     "simhash_buckets",

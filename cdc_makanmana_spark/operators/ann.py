@@ -25,6 +25,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from cdc_makanmana_spark.session import materialize
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -441,26 +443,6 @@ def label_cell_assign_two_level(
     ).drop("__coarse", "__lc")
 
 
-def ivf_index(
-    df: DataFrame,
-    n_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    sample_fraction: float | None = None,
-):
-    """IVF coarse quantizer: k-means cells over the vectors.
-
-    Returns ``(assigned_df, centers)`` where ``assigned_df`` adds a
-    ``__cell`` column (nearest-centroid id) and ``centers`` is the
-    local list of centroids for query-side probing. Composition of
-    :func:`ivf_train` (fit on ``sample_fraction`` — the offline build)
-    and :func:`ivf_assign` (expression-only argmin — the one full-table
-    pass)."""
-    centers = ivf_train(df, n_cells, vec_col, seed, sample_fraction)
-    return ivf_assign(df, centers, vec_col), centers
-
-
 def cosine_topk_ivf(
     df: DataFrame,
     query_vec: list[float],
@@ -667,7 +649,6 @@ def embedding_near_duplicates(
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
     dim = resolve_dim(df, vec_col, dim)
-    from cdc_makanmana_spark.operators.dedup import _materialize
 
     # (id, vec, band-signature) rows, MATERIALIZED once: the signature
     # is bits x bands interpreted hyperplane dots per row, and this
@@ -682,7 +663,7 @@ def embedding_near_duplicates(
     # and pairs outnumber rows whenever duplicates are dense (measured
     # 2.3x slower at sf1 on the organic fixture).
     sigs = _cap_buckets(
-        _materialize(_band_signatures(df, vec_col, id_col, bits, bands, seed, dim)),
+        materialize(_band_signatures(df, vec_col, id_col, bits, bands, seed, dim)),
         max_bucket,
     )
     a = sigs.select(F.col("__id").alias("id_a"), F.col("__vec").alias("vec_a"), "__bs")
@@ -752,7 +733,6 @@ def embedding_cross_hits(
             f"embedding dim mismatch: corpus={dim}, bench={bench_dim} — "
             "cross-set LSH needs both sides in the same vector space"
         )
-    from cdc_makanmana_spark.operators.dedup import _materialize
 
     def prep(df: DataFrame) -> DataFrame:
         sigs = _band_signatures(df, vec_col, id_col, bits, bands, seed, dim)
@@ -761,7 +741,7 @@ def embedding_cross_hits(
             # be pure storage overhead (the single-set operator's
             # materialize is justified by its THREE consumers)
             return sigs
-        return _cap_buckets(_materialize(sigs), max_bucket)
+        return _cap_buckets(materialize(sigs), max_bucket)
 
     if max_bucket is None:
         sc = prep(corpus)
@@ -815,51 +795,6 @@ def embedding_cross_hits(
 # literature, composed here from the same literal-center argmin
 # machinery ivf_assign uses.
 # ---------------------------------------------------------------------------
-
-
-def pq_train(
-    df: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    seed: int = 42,
-    sample_fraction: float | None = None,
-) -> list[list[list[float]]]:
-    """PQ codebook TRAINING (offline build artifact, like ivf_train):
-    independent k-means per subspace over (a sample of) the vectors.
-    Returns codebooks[s][j] = center j of subspace s (dim/m floats).
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = resolve_dim(df, vec_col, dim)
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
-    fit_src = (
-        df.sample(fraction=sample_fraction, seed=seed)
-        if sample_fraction is not None
-        else df
-    )
-    fit_src = fit_src.select(F.col(vec_col).cast("array<double>").alias("__v"))
-    fit_src = _materialize_for_fit(fit_src)
-    books = []
-    for s in range(m):
-        feat = fit_src.withColumn(
-            "__fv", array_to_vector(F.slice("__v", s * sub + 1, sub))
-        )
-        km = KMeans(k=k, seed=seed + s, featuresCol="__fv", predictionCol="__c")
-        books.append(
-            [list(map(float, c)) for c in km.fit(feat).clusterCenters()]
-        )
-    return books
-
-
-def _materialize_for_fit(df: DataFrame) -> DataFrame:
-    """m k-means fits consume the same (sampled) frame; cut lineage
-    once so the sample is not recomputed per subspace."""
-    return df.localCheckpoint(eager=True)
 
 
 def pq_seed_codebooks(
@@ -937,9 +872,7 @@ def pq_topk(
     lookups summed in subspace order — no per-row float vector math at
     all. Returns (id, approx_l2) rounded 6, ascending, ties on id —
     plans TakeOrderedAndProject. Recall depends on codebook quality
-    (trained vs seeded) and m/k; rerank the top candidates against
-    true vectors when exactness matters (same pattern as the LSH
-    rerank tiers)."""
+    and m/k."""
     m = len(codebooks)
     sub = len(codebooks[0][0])
     if len(query_vec) != m * sub:
@@ -966,34 +899,5 @@ def pq_topk(
     return (
         enc.select(F.col(id_col), F.round(dist, 6).alias("approx_l2"))
         .orderBy(F.asc("approx_l2"), F.asc(id_col))
-        .limit(k_top)
-    )
-
-
-def pq_topk_rerank(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k_top: int = 10,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The standard PQ serving composition: PQ-approximate SHORTLIST
-    (cheap, codes-only) → exact L2 rerank of just the shortlist against
-    the true vectors → top-k. Approximation error only costs recall at
-    the shortlist boundary (measured on the fixture: m=8, k=16 holds
-    9/10 of the exact top-10 inside a 100-shortlist); the returned
-    distances are exact. Returns (id, l2_dist) ascending, ties on id."""
-    short = pq_topk(df, codebooks, query_vec, shortlist, id_col, vec_col).select(
-        id_col
-    )
-    cand = df.join(F.broadcast(short), id_col, "left_semi")
-    exact = _l2sq_vs_literal(
-        F.col(vec_col).cast("array<double>"), [float(x) for x in query_vec]
-    )
-    return (
-        cand.select(F.col(id_col), F.round(F.sqrt(exact), 6).alias("l2_dist"))
-        .orderBy(F.asc("l2_dist"), F.asc(id_col))
         .limit(k_top)
     )

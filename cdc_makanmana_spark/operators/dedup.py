@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cdc_makanmana_spark.functions.text import doc_fingerprint
-from cdc_makanmana_spark.operators.similarity import argmax_per_group
+from cdc_makanmana_spark.session import materialize
 
 
 def _norm_text(col):
@@ -88,33 +88,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if est_splits < target:
         return df.repartition(target)
     return df
-
-
-def materialize(df: DataFrame) -> DataFrame:
-    """Cut lineage on a small, multiply-consumed intermediate.
-
-    EAGER: this submits the producing job at CALL time (plan
-    construction), not at the caller's first action — a function that
-    otherwise returns a lazy DataFrame becomes eager the moment it
-    wraps an intermediate in this. Callers across the operator modules
-    (dedup, ann, corpus, graph, range, multimodal) import it for
-    exactly that trade; release the blocks with
-    ``session.release_materialized`` at job boundaries.
-
-    ``localCheckpoint`` stores the partitions on executors and truncates
-    the plan, so N downstream consumers read it instead of re-running
-    the (text-heavy) producer N times. Measured on q24 at sf0.1:
-    4.8 s vs 13.1 s recompute vs 10.0 s persist() (persist keeps the
-    lineage and pays async cache-block churn). On a real cluster a
-    lost executor forfeits a localCheckpoint (no lineage to recompute)
-    — at 100 TB this intermediate becomes a checkpoint TABLE; the
-    call sites are the places that table would go."""
-    return df.localCheckpoint(eager=True)
-
-
-# historical private name — the cross-module call sites predate the
-# public promotion (r10 ADVICE)
-_materialize = materialize
 
 
 def dedup_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -332,7 +305,7 @@ def ngram_jaccard_pairs(
     """
     # (id, hash) feeds four consumers (freq count, cap semi-join,
     # per-doc sizes, bucket build) → materialize once instead of
-    # re-running the shingle explode per consumer (see _materialize).
+    # re-running the shingle explode per consumer (see session.materialize).
     # Row-form generation (shingle_rows, codegen) emits OCCURRENCES;
     # the per-doc-distinct set every count below assumes is restored by
     # a distinct on the (8-byte id, 8-byte hash) pair — one narrow
@@ -342,7 +315,7 @@ def ngram_jaccard_pairs(
     # 4.3 s single-threaded) — the number that is the bill at 100 TB —
     # and the distinct also shrinks the materialized frame (~20% fewer
     # rows on the fixture).
-    sh = _materialize(
+    sh = materialize(
         shingle_rows(
             _spread(df.select(F.col(id_col).alias("__id"), text_col)),
             text_col,
@@ -470,8 +443,8 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
     # The banded table feeds both sides of the self-join → materialize
     # the signatures once instead of running the shingle+hash pipeline
-    # twice (see _materialize).
-    sigs = _materialize(
+    # twice (see session.materialize).
+    sigs = materialize(
         minhash_signatures(_spread(df), text_col, id_col, num_hashes, shingle_n)
     )
     banded = _band_buckets(sigs, bands, rows_per_band)
@@ -549,13 +522,16 @@ def winnowing_fingerprint_rows(
     window: int = 4,
     gram_hash: str = "xxhash64",
 ) -> DataFrame:
-    """Winnowing fingerprints as (id, fp) ROWS — the corpus-scale form
-    of ``functions.text.winnowing_fingerprints`` (same selection, same
-    guarantee: shared runs of >= k + window - 1 words share a
-    fingerprint).
+    """Winnowing fingerprints as (id, fp) ROWS (rolling-hash document
+    fingerprinting, the MOSS scheme): hash every word k-gram, then
+    keep the minimum hash of each sliding window of ``window``
+    consecutive k-gram hashes. Guarantees: any shared run of
+    >= k + window - 1 words between two documents shares at least one
+    selected fingerprint — partial-overlap detection, where
+    ``doc_fingerprint`` only catches whole-document equality.
 
-    Why a separate form: the array expression hashes every k-gram
-    inside a higher-order-function lambda, which Spark evaluates
+    Why rows, not an array column: an array expression hashes every
+    k-gram inside a higher-order-function lambda, which Spark evaluates
     INTERPRETED, outside whole-stage codegen and without common-
     subexpression elimination — measured 23.7 s vs 2.1 s at sf0.1 for
     the md5 gram hash (11x). Here gram building, hashing, and the
@@ -658,8 +634,8 @@ def simhash_buckets(
         + ")"
     )
     # Signatures feed both sides of the Hamming-bucket self-join →
-    # materialize the (id, long) table once (see _materialize).
-    return _materialize(votes.select("__id", simhash.alias("simhash")))
+    # materialize the (id, long) table once (see session.materialize).
+    return materialize(votes.select("__id", simhash.alias("simhash")))
 
 
 def simhash_hamming_pairs(
@@ -716,7 +692,7 @@ def hamming_pairs(
     if not 1 <= max_distance <= 8:
         raise ValueError("max_distance must be in [1, 8]")
     sigs = df.select(F.col(sig_col).alias("simhash"), F.col(id_col).alias("__id"))
-    groups = _materialize(
+    groups = materialize(
         sigs.groupBy("simhash").agg(F.array_sort(F.collect_list("__id")).alias("__ids"))
     )
 
@@ -803,12 +779,12 @@ def connected_components(
     # expensive similarity-join pipeline, and the loop consumes edges
     # every iteration — without the cut, each iteration would re-run
     # the whole pair generation (measured 5×+ total cost).
-    edges = _materialize(
+    edges = materialize(
         pair_df.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pair_df.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
-    labels = _materialize(
+    labels = materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("component", F.col("id"))
@@ -856,7 +832,7 @@ def connected_components(
     steps = 0
     while steps < max_iter + 2:
         lab2 = _step(_step(labels))
-        labels = _materialize(lab2)
+        labels = materialize(lab2)
         steps += 2
         new_sum = _label_sum(labels)
         if new_sum == prev_sum:
@@ -984,96 +960,3 @@ def decontaminate(
         train, eval_df, text_col, id_col, n, broadcast_eval
     ).filter(F.col("n_hits") >= min_hits)
     return train.join(hits.select(id_col), id_col, "left_anti")
-
-
-def dedup_against_corpus(
-    batch: DataFrame,
-    corpus: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 32,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Incremental dedup: drop batch docs that duplicate the EXISTING
-    corpus (exact tier, then MinHash-LSH near tier with exact-Jaccard
-    rerank). The growing-corpus ingestion pattern — each new crawl
-    batch is deduped against everything already kept, without ever
-    re-pairing the corpus against itself.
-
-    Tiers:
-    1. exact — md5 content fingerprint anti-join (NULL-text batch rows
-       have a NULL fingerprint, never match, and survive);
-    2. near — band buckets on both sides, equi-join on (band, bucket)
-       restricted to corpus×batch (never corpus×corpus: the corpus is
-       assumed already deduped, so its self-pairs are dead work),
-       distinct candidate pairs, then EXACT Jaccard on word shingles
-       decides the drop. Blank-text rows don't participate (operator
-       blank policy) and survive the near tier.
-
-    Scale shape: the corpus side's signatures are the expensive input —
-    in production they are a build artifact maintained incrementally
-    (append each surviving batch's signatures), so the steady-state
-    cost is ~O(|batch|) per ingest plus the (band,bucket) join against
-    the signature index. All shuffle keys are 8-byte hashes; rerank
-    touches only LSH candidates, never O(|batch|·|corpus|).
-
-    Returns the surviving batch rows (all original columns).
-    """
-    rows_per_band = num_hashes // bands
-
-    fp = doc_fingerprint(F.col(text_col))
-    cfp = corpus.select(fp.alias("__fp")).filter(F.col("__fp").isNotNull()).distinct()
-    survivors = batch.withColumn("__fp", fp).join(cfp, "__fp", "left_anti").drop("__fp")
-
-    bsig = _materialize(
-        minhash_signatures(_spread(survivors), text_col, id_col, num_hashes, shingle_n)
-    )
-    csig = minhash_signatures(_spread(corpus), text_col, id_col, num_hashes, shingle_n)
-    bb = _band_buckets(bsig, bands, rows_per_band).select(
-        F.col("__id").alias("__bid"), "band", "bucket"
-    )
-    cb = _band_buckets(csig, bands, rows_per_band).select(
-        F.col("__id").alias("__cid"), "band", "bucket"
-    )
-    # cand feeds three consumers (two id prunes + the rerank join) —
-    # cut lineage so the LSH candidate pipeline runs once
-    cand = _materialize(
-        bb.join(cb, ["band", "bucket"])
-        .select("__bid", "__cid")
-        .dropDuplicates(["__bid", "__cid"])
-    )
-
-    # build the (interpreted-HOF) shingle ARRAYS only for docs that
-    # actually appear in a candidate pair: the semi-join prune keeps
-    # the full corpus on the codegen/broadcast path and bounds the
-    # HOF cost by the candidate count, not the corpus size
-    bids = cand.select(F.col("__bid").alias(id_col)).distinct()
-    cids = cand.select(F.col("__cid").alias(id_col)).distinct()
-    sh_b = (
-        _drop_blank_text(survivors, text_col)
-        .join(bids, id_col, "left_semi")
-        .select(
-            F.col(id_col).alias("__bid"),
-            word_shingles(F.col(text_col), shingle_n).alias("__shb"),
-        )
-    )
-    sh_c = (
-        _drop_blank_text(corpus, text_col)
-        .join(cids, id_col, "left_semi")
-        .select(
-            F.col(id_col).alias("__cid"),
-            word_shingles(F.col(text_col), shingle_n).alias("__shc"),
-        )
-    )
-    inter = F.size(F.array_intersect("__shb", "__shc")).cast("double")
-    drop = (
-        cand.join(sh_b, "__bid")
-        .join(sh_c, "__cid")
-        .withColumn("__j", inter / (F.size("__shb") + F.size("__shc") - inter))
-        .filter(F.col("__j") >= threshold)
-        .select(F.col("__bid").alias(id_col))
-        .distinct()
-    )
-    return survivors.join(drop, id_col, "left_anti")

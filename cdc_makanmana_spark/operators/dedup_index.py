@@ -1,10 +1,10 @@
 """Persisted MinHash signature index — the incremental-dedup artifact.
 
-``dedup_against_corpus`` (dedup.py) recomputes the corpus's
-fingerprints and MinHash signatures on every ingest; its docstring
-notes that in production those are a build artifact maintained
-incrementally. This module IS that artifact: a parquet-backed index
-holding, per kept document,
+Deduping a new batch against a growing corpus needs the corpus's
+fingerprints and MinHash signatures; recomputing them on every ingest
+re-reads the whole corpus text. This module keeps them as a build
+artifact maintained incrementally: a parquet-backed index holding,
+per kept document,
 
 - ``fp``       — md5 content fingerprint (exact-dup tier),
 - ``signature``— MinHash signature array (LSH candidate tier),
@@ -54,11 +54,11 @@ from cdc_makanmana_spark.functions.text import doc_fingerprint
 from cdc_makanmana_spark.operators.dedup import (
     _band_buckets,
     _drop_blank_text,
-    _materialize,
     _spread,
     minhash_signatures,
     word_shingles,
 )
+from cdc_makanmana_spark.session import materialize
 
 _META = "_index_meta.json"
 _SCRUB_STAGING = ".__scrubstg_"
@@ -224,7 +224,7 @@ class SignatureIndex:
         ignore and the retry overwrites."""
         if self._is_appended(batch_id):
             return
-        entries = _materialize(self._entries(df)) if _entries is None else _entries
+        entries = materialize(self._entries(df)) if _entries is None else _entries
         # provenance column: lets ingest() recover a batch's survivors
         # from a compacted base after the per-batch dir is folded away
         entries = entries.withColumn("src_batch", F.lit(int(batch_id)))
@@ -430,7 +430,7 @@ class SignatureIndex:
             self.num_hashes, self.shingle_n,
         )
         if materialize_sig:
-            bsig = _materialize(bsig)
+            bsig = materialize(bsig)
         ib = self.buckets()
         if ib is None:
             return survivors, bsig
@@ -468,8 +468,8 @@ class SignatureIndex:
         """Batch rows that survive against the INDEX (exact fingerprint
         tier, then LSH candidates + exact Jaccard over stored shingle
         hashes). The corpus's text is never touched — only its stored
-        signatures. Same semantics as ``dedup_against_corpus`` minus
-        the corpus recompute; within-batch duplicates survive (dedup
+        signatures, and the corpus never pairs with itself (it is
+        assumed already deduped); within-batch duplicates survive (dedup
         the batch separately if ingest order matters). Signatures stay
         lazy here — read-only serving has no reuse for them (see
         ``_dedup``)."""
@@ -499,9 +499,9 @@ class SignatureIndex:
             kept = kept.select(F.col("id").alias(self.id_col))
             return batch.join(kept, self.id_col, "left_semi")
         survivors, bsig = self._dedup(batch, threshold)
-        survivors = _materialize(survivors)
+        survivors = materialize(survivors)
         if bsig is None:
-            entries = _materialize(self._entries(survivors))
+            entries = materialize(self._entries(survivors))
         else:
             nonblank = F.col(self.text_col).isNotNull() & (
                 F.trim(F.col(self.text_col)) != ""
@@ -513,7 +513,7 @@ class SignatureIndex:
                     nonblank, _shingle_hashes(F.col(self.text_col), self.shingle_n)
                 ).alias("sh"),
             )
-            entries = _materialize(
+            entries = materialize(
                 base.join(
                     bsig.select(F.col("__id").alias("id"), "signature"), "id", "left"
                 )

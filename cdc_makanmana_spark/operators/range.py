@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_makanmana_spark.session import materialize
+
 
 def interval_join(
     points: DataFrame,
@@ -85,9 +87,7 @@ def interval_join(
     # (lineage cut) and both branches read the same stored rows; without
     # this, an upstream shuffle with unstable intra-partition order
     # silently duplicates or drops points.
-    from cdc_makanmana_spark.operators.dedup import _materialize
-
-    p = _materialize(
+    p = materialize(
         points.withColumn("__pid", F.monotonically_increasing_id())
     ).withColumn("__bin", F.floor(F.unix_micros(F.col(point_ts)) / bw_us))
     matched = p.join(ibins, [*keys, "__bin"]).filter(contained).drop("__bin")

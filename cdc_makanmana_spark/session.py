@@ -10,7 +10,7 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "cdc-makanmana-spark") -> SparkSession:
@@ -77,10 +77,32 @@ def get_spark(app_name: str = "cdc-makanmana-spark") -> SparkSession:
     return builder.getOrCreate()
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut lineage on a small, multiply-consumed intermediate.
+
+    EAGER: this submits the producing job at CALL time (plan
+    construction), not at the caller's first action — a function that
+    otherwise returns a lazy DataFrame becomes eager the moment it
+    wraps an intermediate in this. Callers across the operator modules
+    (dedup, ann, corpus, graph, range, multimodal) import it for
+    exactly that trade; release the blocks with
+    ``release_materialized`` at job boundaries.
+
+    ``localCheckpoint`` stores the partitions on executors and truncates
+    the plan, so N downstream consumers read it instead of re-running
+    the (text-heavy) producer N times. Measured on q24 at sf0.1:
+    4.8 s vs 13.1 s recompute vs 10.0 s persist() (persist keeps the
+    lineage and pays async cache-block churn). On a real cluster a
+    lost executor forfeits a localCheckpoint (no lineage to recompute)
+    — at 100 TB this intermediate becomes a checkpoint TABLE; the
+    call sites are the places that table would go."""
+    return df.localCheckpoint(eager=True)
+
+
 def release_materialized(spark: SparkSession) -> int:
     """Unpersist every persisted RDD in the session — the explicit
-    job-boundary release for ``_materialize``'s ``localCheckpoint``
-    blocks (operators/dedup.py:93).
+    job-boundary release for ``materialize``'s ``localCheckpoint``
+    blocks (above).
 
     Checkpoint blocks are NOT dropped by ``spark.catalog.clearCache()``
     (that only covers SQL-cached plans), and GC-driven cleanup is

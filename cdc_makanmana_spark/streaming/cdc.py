@@ -137,29 +137,6 @@ def windowed_agg_stream(
     )
 
 
-def sessionized_stream(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-    value_col: str = "value",
-) -> DataFrame:
-    """Watermarked session windows per key (gap-based merge) — the
-    streaming twin of q31."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("w"), *key_cols)
-        .agg(F.count("*").alias("n_events"), F.round(F.sum(value_col), 4).alias("total_value"))
-        .select(
-            *key_cols,
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
 def dedup_within_watermark(
     events: DataFrame, key_cols: list[str], ts_col: str = "ts", watermark: str = "1 hour"
 ) -> DataFrame:

@@ -76,16 +76,3 @@ class ProgressTracker(StreamingQueryListener):
 
     def __exit__(self, *exc) -> None:
         self._spark.streams.removeListener(self)
-
-
-def last_progress_summary(query) -> dict[str, Any] | None:
-    """Pull-based progress (``query.lastProgress``): the polling twin
-    of the listener, for callers that own the query handle."""
-    p = query.lastProgress
-    if not p:
-        return None
-    return {
-        "batch_id": p.get("batchId"),
-        "num_input_rows": p.get("numInputRows"),
-        "rows_per_sec": p.get("processedRowsPerSecond"),
-    }

@@ -80,14 +80,3 @@ def _configure_parquet_timestamps(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark._cdc_parquet_ts_configured = True
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load all fixture tables and register them as temp views so the
-    same queries run via the DataFrame API or ``spark.sql``."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, name, sf_dir)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

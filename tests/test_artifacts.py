@@ -1,14 +1,15 @@
-"""Build-artifact cache behavior (plans/queries._artifact):
+"""Build-artifact store behavior (cdc_makanmana_spark/artifacts.py):
 
-- build-once within a process (dict hit),
+- build-once within a process (memo hit),
 - cross-process reuse via the on-disk _COMMITTED marker,
 - invalidation when a source table is regenerated (stat_token change),
+  for committed artifacts and in-process memo values alike,
 - an unmarked (crashed mid-build) directory is rebuilt, not served.
 """
 
 import pytest
 
-from cdc_makanmana_spark.plans import queries as Q
+from cdc_makanmana_spark import artifacts as A
 
 
 def _build_counter(spark, calls):
@@ -23,17 +24,17 @@ def _build_counter(spark, calls):
 def _cleanup_unit_artifacts(spark):
     """Each test's tmp_path gives a fresh fingerprint, so without
     cleanup every pytest run would leave new unit_t* dirs in /tmp.
-    Sweep by name prefix on disk (the in-memory dict loses paths when
-    tests .clear() it to simulate a new process)."""
+    Sweep by name prefix on disk (the memo loses paths when tests
+    .clear() it to simulate a new process)."""
     yield
     from cdc_makanmana_spark import fs
 
-    root = Q._artifact_root()
+    root = A.artifact_root()
     for child in fs.list_names(spark, root):
         if child.startswith("unit_t"):
             fs.delete(spark, f"{root}/{child}")
-    for key in [k for k in Q._ARTIFACTS if k[1].startswith("unit_t")]:
-        del Q._ARTIFACTS[key]
+    for key in [k for k in A._MEMO if k[1].startswith("unit_t")]:
+        del A._MEMO[key]
 
 
 def test_artifact_builds_once_and_reuses_committed(spark, tmp_path):
@@ -42,17 +43,17 @@ def test_artifact_builds_once_and_reuses_committed(spark, tmp_path):
     calls = []
     build = _build_counter(spark, calls)
 
-    assert Q._artifact(spark, sf, "unit_t", ("documents",), build).count() == 3
+    assert A.artifact(spark, sf, "unit_t", ("documents",), build).count() == 3
     assert len(calls) == 1
 
     # same process: dict hit, no rebuild
-    Q._artifact(spark, sf, "unit_t", ("documents",), build)
+    A.artifact(spark, sf, "unit_t", ("documents",), build)
     assert len(calls) == 1
 
     # "new process" (cleared in-memory cache): the committed on-disk
     # artifact is reused, not rebuilt
-    Q._ARTIFACTS.clear()
-    assert Q._artifact(spark, sf, "unit_t", ("documents",), build).count() == 3
+    A._MEMO.clear()
+    assert A.artifact(spark, sf, "unit_t", ("documents",), build).count() == 3
     assert len(calls) == 1
 
 
@@ -62,18 +63,30 @@ def test_artifact_invalidated_when_source_regenerated(spark, tmp_path):
     src.write_bytes(b"generation-1")
     calls = []
     build = _build_counter(spark, calls)
+    memo_calls = []
 
-    Q._artifact(spark, sf, "unit_t2", ("documents",), build)
+    def memo_build():
+        memo_calls.append(1)
+        return len(memo_calls)
+
+    A.artifact(spark, sf, "unit_t2", ("documents",), build)
     assert len(calls) == 1
+    assert A.memo(spark, sf, "unit_t2m", ("documents",), memo_build) == 1
+    assert A.memo(spark, sf, "unit_t2m", ("documents",), memo_build) == 1
+    memo_gen = A._MEMO[(sf, "unit_t2m")][0]
 
     # regenerate the source (different size => different stat token):
     # the stale artifact must NOT be served, in-process or across
-    # processes
+    # processes, and the memo value is rebuilt
     src.write_bytes(b"generation-2!")
-    Q._artifact(spark, sf, "unit_t2", ("documents",), build)
+    A.artifact(spark, sf, "unit_t2", ("documents",), build)
     assert len(calls) == 2
-    Q._ARTIFACTS.clear()
-    Q._artifact(spark, sf, "unit_t2", ("documents",), build)
+    assert A.memo(spark, sf, "unit_t2m", ("documents",), memo_build) == 2
+    # the new generation REPLACES the superseded memo entry
+    assert [k for k in A._MEMO if k[1] == "unit_t2m"] == [(sf, "unit_t2m")]
+    assert A._MEMO[(sf, "unit_t2m")][0] != memo_gen
+    A._MEMO.clear()
+    A.artifact(spark, sf, "unit_t2", ("documents",), build)
     assert len(calls) == 2
 
 
@@ -91,13 +104,13 @@ def test_artifact_invalidated_on_param_change_and_old_gen_evicted(spark, tmp_pat
     calls = []
     build = _build_counter(spark, calls)
 
-    Q._artifact(spark, sf, "unit_t4", ("documents",), build, params="m=10")
+    A.artifact(spark, sf, "unit_t4", ("documents",), build, params="m=10")
     assert len(calls) == 1
-    old_path = next(p for (_, n, _), p in Q._ARTIFACTS.items() if n == "unit_t4")
+    old_path = A._MEMO[(sf, "unit_t4")][1]
 
-    Q._artifact(spark, sf, "unit_t4", ("documents",), build, params="m=12")
+    A.artifact(spark, sf, "unit_t4", ("documents",), build, params="m=12")
     assert len(calls) == 2
-    new_path = next(p for (_, n, _), p in Q._ARTIFACTS.items() if n == "unit_t4")
+    new_path = A._MEMO[(sf, "unit_t4")][1]
     assert new_path != old_path
     assert not fs.exists(spark, old_path), "superseded generation not evicted"
 
@@ -105,7 +118,7 @@ def test_artifact_invalidated_on_param_change_and_old_gen_evicted(spark, tmp_pat
     other = tmp_path / "other_sf"
     os.makedirs(other)
     (other / "documents.parquet").write_bytes(b"generation-1")
-    Q._artifact(spark, str(other), "unit_t4", ("documents",), build, params="m=12")
+    A.artifact(spark, str(other), "unit_t4", ("documents",), build, params="m=12")
     assert len(calls) == 3
     assert fs.exists(spark, new_path), "sibling sf_dir artifact wrongly evicted"
 
@@ -152,7 +165,7 @@ def test_concurrent_builders_converge_to_one_committed_generation(spark, tmp_pat
         "import os, pathlib, sys, time\n"
         f"sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})\n"
         "from cdc_makanmana_spark.session import get_spark\n"
-        "from cdc_makanmana_spark.plans import queries as Q\n"
+        "from cdc_makanmana_spark import artifacts as A\n"
         "spark = get_spark('unit-concurrent-builder')\n"
         "def build():\n"
         f"    pathlib.Path({sentinel!r}).touch()  # signal: race window open\n"
@@ -165,7 +178,7 @@ def test_concurrent_builders_converge_to_one_committed_generation(spark, tmp_pat
         "            raise RuntimeError('main process never committed')\n"
         "        time.sleep(0.2)\n"
         "    return spark.range(3).toDF('id')\n"
-        f"df = Q._artifact(spark, {sf!r}, 'unit_trace', ('documents',), build)\n"
+        f"df = A.artifact(spark, {sf!r}, 'unit_trace', ('documents',), build)\n"
         "print('ROWS', df.count(), flush=True)\n"
     )
     env = dict(os.environ, SPARK_GRAFT_CPUS="2")
@@ -186,7 +199,7 @@ def test_concurrent_builders_converge_to_one_committed_generation(spark, tmp_pat
             assert time.time() < deadline, "subprocess never entered build"
             time.sleep(0.5)
         calls = []
-        df = Q._artifact(spark, sf, "unit_trace", ("documents",), _build_counter(spark, calls))
+        df = A.artifact(spark, sf, "unit_trace", ("documents",), _build_counter(spark, calls))
         assert df.count() == 3 and len(calls) == 1
         open(main_done, "w").close()  # release the subprocess's build
         out, _ = proc.communicate(timeout=180)
@@ -197,14 +210,14 @@ def test_concurrent_builders_converge_to_one_committed_generation(spark, tmp_pat
 
     from cdc_makanmana_spark import fs
 
-    root = Q._artifact_root()
+    root = A.artifact_root()
     gens = [n for n in fs.list_names(spark, root) if n.startswith("unit_trace_")]
     assert len(gens) == 1  # one generation, not one per builder
     path = f"{root}/{gens[0]}"
     assert fs.is_committed(spark, path)
     # the surviving generation is complete and readable from a cold cache
-    Q._ARTIFACTS.clear()
-    assert Q._artifact(
+    A._MEMO.clear()
+    assert A.artifact(
         spark, sf, "unit_trace", ("documents",), _build_counter(spark, [])
     ).count() == 3
 
@@ -220,13 +233,13 @@ def test_artifact_unmarked_dir_is_rebuilt(spark, tmp_path):
     calls = []
     build = _build_counter(spark, calls)
 
-    Q._artifact(spark, sf, "unit_t3", ("documents",), build)
-    path = next(p for (_, n, _), p in Q._ARTIFACTS.items() if n == "unit_t3")
+    A.artifact(spark, sf, "unit_t3", ("documents",), build)
+    path = A._MEMO[(sf, "unit_t3")][1]
     assert len(calls) == 1
 
     # simulate the crash window: drop the marker, clear the dict
     fs.delete(spark, f"{path}/{fs.COMMIT_MARKER}")
-    Q._ARTIFACTS.clear()
-    Q._artifact(spark, sf, "unit_t3", ("documents",), build)
+    A._MEMO.clear()
+    A.artifact(spark, sf, "unit_t3", ("documents",), build)
     assert len(calls) == 2
     assert fs.is_committed(spark, path)

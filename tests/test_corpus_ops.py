@@ -1,20 +1,53 @@
 """Tests for the corpus-hygiene operators: benchmark decontamination
-and incremental (batch-vs-corpus) dedup."""
+and incremental (batch-vs-corpus) dedup through SignatureIndex."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_makanmana_spark.operators.dedup import (
-    contamination_hits,
-    decontaminate,
-    dedup_against_corpus,
-)
+from cdc_makanmana_spark.operators.dedup import contamination_hits, decontaminate
+from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "id long, text string")
+
+
+def _corpus_index(spark, path, corpus):
+    """A fresh SignatureIndex at ``path`` holding ``corpus`` — the
+    served batch-vs-corpus dedup path (q50)."""
+    idx = SignatureIndex(spark, str(path), id_col="id")
+    idx.append(corpus, batch_id=0)
+    return idx
+
+
+def _kept(idx, batch, threshold=0.8):
+    return sorted(r["id"] for r in idx.dedup_batch(batch, threshold).collect())
+
+
+def _brute_force_kept(batch, corpus, threshold=0.8, n=3):
+    """Reference dedup in plain Python: a batch row dies iff some
+    corpus row has the same normalized text, or both are non-blank and
+    their word n-gram sets reach ``threshold`` Jaccard."""
+
+    def norm(t):
+        return " ".join(t.lower().split())
+
+    def shingles(t):
+        w = norm(t).split(" ") if norm(t) else []
+        return {" ".join(w[i:i + n]) for i in range(max(len(w) - (n - 1), 1))} if w else set()
+
+    def dup(t, c):
+        if norm(t) == norm(c):
+            return True
+        a, b = shingles(t), shingles(c)
+        return bool(a and b) and len(a & b) / len(a | b) >= threshold
+
+    return sorted(
+        i for i, t in batch
+        if t is None or not any(c is not None and dup(t, c) for _, c in corpus)
+    )
 
 
 class TestDecontamination:
@@ -77,7 +110,7 @@ class TestDecontamination:
 class TestDedupAgainstCorpus:
     BASE = "spark dataframes shuffle on wide joins unless the planner broadcasts the small side first"
 
-    def test_exact_and_near_tiers(self, spark):
+    def test_exact_and_near_tiers(self, spark, tmp_path):
         corpus = _docs(
             spark,
             [
@@ -93,43 +126,40 @@ class TestDedupAgainstCorpus:
                 (12, "fresh content that matches no existing corpus document in any way whatsoever"),
             ],
         )
-        kept = sorted(
-            r["id"] for r in dedup_against_corpus(batch, corpus, "text", "id").collect()
-        )
-        assert kept == [12]
+        assert _kept(_corpus_index(spark, tmp_path / "idx", corpus), batch) == [12]
 
-    def test_corpus_never_self_pairs_and_batch_dups_within_batch_survive(self, spark):
+    def test_corpus_never_self_pairs_and_batch_dups_within_batch_survive(self, spark, tmp_path):
         # two near-identical docs INSIDE the batch, absent from the corpus:
         # incremental dedup only removes duplicates OF THE CORPUS — both stay
         # (within-batch dedup is the self-join operator's job).
         corpus = _docs(spark, [(1, "nothing shared with the new batch documents here at all")])
         t = "sequence packing groups short documents into fixed token budget bins greedily"
         batch = _docs(spark, [(10, t), (11, t + " indeed")])
-        kept = sorted(r["id"] for r in dedup_against_corpus(batch, corpus, "text", "id").collect())
-        assert kept == [10, 11]
+        assert _kept(_corpus_index(spark, tmp_path / "idx", corpus), batch) == [10, 11]
 
-    def test_null_and_blank_batch_rows_survive(self, spark):
+    def test_null_and_blank_batch_rows_survive(self, spark, tmp_path):
         corpus = _docs(spark, [(1, "corpus text that is long enough to shingle properly okay")])
         batch = _docs(spark, [(10, None), (11, "   ")])
-        kept = sorted(r["id"] for r in dedup_against_corpus(batch, corpus, "text", "id").collect())
+        kept = _kept(_corpus_index(spark, tmp_path / "idx", corpus), batch)
         # NULL fingerprint never matches; whitespace-only doesn't match
         # any corpus fingerprint here and can't participate in the near tier
         assert kept == [10, 11]
 
-    def test_blank_batch_row_drops_on_exact_blank_corpus_match(self, spark):
+    def test_blank_batch_row_drops_on_exact_blank_corpus_match(self, spark, tmp_path):
         # exact tier treats two whitespace-only docs as identical content
         corpus = _docs(spark, [(1, "  ")])
         batch = _docs(spark, [(10, " \t ")])
-        assert dedup_against_corpus(batch, corpus, "text", "id").count() == 0
+        assert _kept(_corpus_index(spark, tmp_path / "idx", corpus), batch) == []
 
-    def test_threshold_respected(self, spark):
+    def test_threshold_respected(self, spark, tmp_path):
         corpus = _docs(spark, [(1, "one two three four five six seven eight nine ten")])
         # ~50% shingle overlap: below 0.8 -> kept; at 0.3 -> dropped
         batch = _docs(spark, [(10, "one two three four five six alpha beta gamma delta epsilon")])
-        assert dedup_against_corpus(batch, corpus, "text", "id", threshold=0.8).count() == 1
-        assert dedup_against_corpus(batch, corpus, "text", "id", threshold=0.3).count() == 0
+        idx = _corpus_index(spark, tmp_path / "idx", corpus)
+        assert _kept(idx, batch, threshold=0.8) == [10]
+        assert _kept(idx, batch, threshold=0.3) == []
 
-    def test_matches_brute_force_on_fixture(self, spark, sf_dir):
+    def test_matches_brute_force_on_fixture(self, spark, sf_dir, tmp_path):
         from cdc_makanmana_spark.tables import load_table
         from cdc_makanmana_spark.operators.dedup import word_shingles, _norm_text
 
@@ -138,10 +168,7 @@ class TestDedupAgainstCorpus:
         )
         batch = d.filter(F.pmod("id", F.lit(4)) == 3)
         corpus = d.filter(F.pmod("id", F.lit(4)) != 3)
-        got = sorted(
-            r["id"]
-            for r in dedup_against_corpus(batch, corpus, "text", "id", threshold=0.8).collect()
-        )
+        got = _kept(_corpus_index(spark, tmp_path / "idx", corpus), batch, threshold=0.8)
 
         # brute force: exact tier on normalized text, near tier all-pairs
         nb = batch.select("id", _norm_text(F.col("text")).alias("nt"), word_shingles(F.col("text")).alias("sh"))
@@ -258,31 +285,21 @@ class TestSignatureIndex:
     C = "fresh third content mentioning watermarks and state store eviction policies"
 
     def test_incremental_dedup_matches_recompute_operator(self, spark, tmp_path):
-        """Index-backed dedup must agree with dedup_against_corpus on
-        the same corpus/batch — exact dups, near dups, novel docs."""
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
-        corpus = _docs(spark, [(1, self.A), (2, self.B)])
-        batch = _docs(
-            spark,
-            [
-                (3, self.A),                  # exact dup
-                (4, self.A + " postscript"),  # near dup
-                (5, self.C),                  # novel
-                (6, None),                    # blank survives
-            ],
-        )
-        idx = SignatureIndex(spark, str(tmp_path / "idx"), id_col="id")
-        idx.append(corpus, batch_id=0)
-        got = sorted(r["id"] for r in idx.dedup_batch(batch).collect())
-        twin = sorted(
-            r["id"] for r in dedup_against_corpus(batch, corpus, "text", "id").collect()
-        )
-        assert got == twin == [5, 6]
+        """Index-backed dedup must agree with a brute-force recompute
+        over the raw corpus text (every batch×corpus pair, string
+        shingles) — exact dups, near dups, novel docs."""
+        corpus_rows = [(1, self.A), (2, self.B)]
+        batch_rows = [
+            (3, self.A),                  # exact dup
+            (4, self.A + " postscript"),  # near dup
+            (5, self.C),                  # novel
+            (6, None),                    # blank survives
+        ]
+        idx = _corpus_index(spark, tmp_path / "idx", _docs(spark, corpus_rows))
+        got = _kept(idx, _docs(spark, batch_rows))
+        assert got == _brute_force_kept(batch_rows, corpus_rows) == [5, 6]
 
     def test_append_grows_index_and_is_idempotent(self, spark, tmp_path):
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         idx = SignatureIndex(spark, str(tmp_path / "idx"), id_col="id")
         idx.append(_docs(spark, [(1, self.A)]), batch_id=0)
         # batch 2 survivor C gets appended; a later near-dup of C dies
@@ -295,15 +312,11 @@ class TestSignatureIndex:
         assert sorted(r["id"] for r in b3.collect()) == [9]
 
     def test_empty_index_passes_batch_through(self, spark, tmp_path):
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         idx = SignatureIndex(spark, str(tmp_path / "idx"), id_col="id")
         batch = _docs(spark, [(1, self.A)])
         assert idx.dedup_batch(batch).count() == 1
 
     def test_parameter_mismatch_raises(self, spark, tmp_path):
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         SignatureIndex(spark, str(tmp_path / "idx"), id_col="id", num_hashes=32)
         with pytest.raises(ValueError, match="was built with"):
             SignatureIndex(spark, str(tmp_path / "idx"), id_col="id", num_hashes=64)
@@ -315,8 +328,6 @@ class TestSignatureIndex:
         the re-run dedup sees the batch's own rows in the index, so a
         naive re-dedup-and-overwrite would yield zero survivors and
         empty the batch's directories."""
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         idx = SignatureIndex(spark, str(tmp_path / "idx"), id_col="id")
         idx.append(_docs(spark, [(1, self.A)]), batch_id=0)
         batch = _docs(spark, [(5, self.C), (6, self.A)])  # novel + dup
@@ -334,8 +345,6 @@ class TestSignatureIndex:
     def test_ingest_computes_minhash_once_and_matches_two_step(self, spark, tmp_path):
         """ingest == dedup_batch + append in one pass; the resulting
         index state must be equivalent (same docs, same postings)."""
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         a = SignatureIndex(spark, str(tmp_path / "a"), id_col="id")
         b = SignatureIndex(spark, str(tmp_path / "b"), id_col="id")
         corpus = _docs(spark, [(1, self.A), (2, self.B)])
@@ -478,8 +487,6 @@ class TestSignatureIndexScrub:
         """Erasing a doc from the index must remove its fingerprint,
         signature and postings — afterwards identical content is no
         longer suppressed (the index stops ACTING on the erased text)."""
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         ix = SignatureIndex(spark, str(tmp_path / "ix"), id_col="id")
         ix.append(_docs(spark, [(1, self.A), (2, self.B)]), batch_id=0)
         # duplicate of doc 1 is suppressed while 1 is indexed
@@ -532,8 +539,6 @@ class TestSignatureIndexCompact:
     C = "a third document about spark engines and distributed analytics at scale"
 
     def _mk(self, spark, tmp_path):
-        from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
-
         ix = SignatureIndex(spark, str(tmp_path / "ixc"), id_col="id")
         ix.append(_docs(spark, [(1, self.A), (2, self.B)]), batch_id=0)
         ix.append(_docs(spark, [(3, self.C)]), batch_id=1)

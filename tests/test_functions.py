@@ -133,20 +133,16 @@ def test_doc_fingerprint_normalizes_whitespace_and_case(spark):
     assert a == b != c
 
 
-def test_arrow_cosine_matches_hof_cosine(spark):
-    """§2.9 extension surface: the Arrow-batched numpy cosine agrees
-    with the codegen HOF cosine to FP-reduction tolerance and yields
-    the same top-k ranking on the embeddings fixture."""
-    from cdc_makanmana_spark.functions.vector_udf import cosine_topk_bruteforce_arrow
-    from cdc_makanmana_spark.operators.ann import cosine_topk_bruteforce
+def _winnow_sets(df, gram_hash="xxhash64"):
+    """doc_id -> set of winnowing fingerprints (k=5, window=4), grouped
+    from winnowing_fingerprint_rows' (id, fp) rows."""
+    from cdc_makanmana_spark.operators.dedup import winnowing_fingerprint_rows
 
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = [float((i * 37 % 19) - 9) / 9.0 for i in range(64)]
-    hof = cosine_topk_bruteforce(e, q, k=10).collect()
-    arrow = cosine_topk_bruteforce_arrow(e, q, k=10).collect()
-    assert [r.vec_id for r in hof] == [r.vec_id for r in arrow]
-    for a, b in zip(hof, arrow):
-        assert abs(a.cosine_sim - b.cosine_sim) <= 1e-6
+    fps = {}
+    rows = winnowing_fingerprint_rows(df, "text", "doc_id", k=5, window=4, gram_hash=gram_hash)
+    for r in rows.collect():
+        fps.setdefault(r.doc_id, set()).add(r.fp)
+    return fps
 
 
 def test_winnowing_shared_run_guarantee(spark):
@@ -154,8 +150,6 @@ def test_winnowing_shared_run_guarantee(spark):
     words share at least one fingerprint; unrelated documents share
     none; fingerprinting is deterministic and position-robust (the
     shared run is found regardless of where it sits in the doc)."""
-    from cdc_makanmana_spark.functions.text import winnowing_fingerprints
-
     shared = "the quick brown fox jumps over the lazy dog tonight"  # 10 words >= 5+4-1
     docs = [
         (1, "intro words here " + shared + " closing remarks"),
@@ -163,29 +157,16 @@ def test_winnowing_shared_run_guarantee(spark):
         (3, "entirely unrelated content about spark physical plans and shuffles"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    fps = {
-        r.doc_id: set(r.fp)
-        for r in df.select(
-            "doc_id", winnowing_fingerprints("text", k=5, window=4).alias("fp")
-        ).collect()
-    }
+    fps = _winnow_sets(df)
     assert fps[1] & fps[2], "shared 10-word run must share a fingerprint"
     assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
-    # deterministic
-    again = {
-        r.doc_id: set(r.fp)
-        for r in df.select(
-            "doc_id", winnowing_fingerprints("text", k=5, window=4).alias("fp")
-        ).collect()
-    }
-    assert fps == again
+    assert fps == _winnow_sets(df)  # deterministic
 
 
 def test_winnowing_md5_gram_hash_portable(spark):
     """The md5_64 gram-hash path (q40's oracle-portable variant) obeys
     the same shared-run guarantee as the xxhash64 scale path, and the
     declared q40 pair query surfaces exactly the overlapping pair."""
-    from cdc_makanmana_spark.functions.text import winnowing_fingerprints
     from cdc_makanmana_spark.plans.queries import _Q40_MIN_SHARED
 
     shared = "one two three four five six seven eight nine ten eleven twelve"
@@ -195,13 +176,7 @@ def test_winnowing_md5_gram_hash_portable(spark):
         (3, "totally different text with no overlapping run of words anywhere"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    fps = {
-        r.doc_id: set(r.fp)
-        for r in df.select(
-            "doc_id",
-            winnowing_fingerprints("text", k=5, window=4, gram_hash="md5_64").alias("fp"),
-        ).collect()
-    }
+    fps = _winnow_sets(df, gram_hash="md5_64")
     assert fps[1] & fps[2]
     assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
     assert _Q40_MIN_SHARED >= 1

@@ -983,42 +983,6 @@ def test_interval_join_left_stable_under_shuffled_input(spark):
         assert total - nulls == inner
 
 
-def test_pq_shortlist_rerank_recovers_exact_neighbors(spark, sf_dir):
-    """Product quantization (operators/ann.py): the trained m=8/k=16
-    codebook's 100-shortlist must hold >= 8/10 of the exact L2 top-10
-    (deterministic: seeded k-means on the fixed fixture), and the
-    rerank composition returns exact distances in exact order for the
-    neighbors it recovers. Seed codebooks must reproduce their own
-    declared arithmetic (q71 covers the oracle side)."""
-    import numpy as np
-
-    from cdc_makanmana_spark.operators.ann import pq_topk, pq_topk_rerank, pq_train
-    from cdc_makanmana_spark.tables import load_table
-
-    e = load_table(spark, "embeddings", sf_dir)
-    qv = [round(((i * 37) % 101) / 101.0, 6) for i in range(64)]
-    rows = e.select("vec_id", "embedding").collect()
-    X = np.array([r.embedding for r in rows], dtype=np.float64)
-    ids = np.array([r.vec_id for r in rows])
-    d = ((X - np.array(qv)) ** 2).sum(axis=1)
-    order = np.lexsort((ids, d))
-    exact10 = [int(i) for i in ids[order[:10]]]
-
-    books = pq_train(e, m=8, k=16, dim=64)
-    short = {r.vec_id for r in pq_topk(e, books, qv, 100).collect()}
-    assert len(short & set(exact10)) >= 8
-
-    got = pq_topk_rerank(e, books, qv, k_top=10, shortlist=100).collect()
-    got_ids = [r.vec_id for r in got]
-    # every returned id must appear in exact order relative to the
-    # exact ranking, and distances must be the true L2
-    expected = [i for i in exact10 if i in short][: len(got_ids)]
-    assert got_ids[: len(expected)] == expected
-    by_id = {int(i): float(np.sqrt(dv)) for i, dv in zip(ids, d)}
-    for r in got:
-        assert abs(r.l2_dist - by_id[r.vec_id]) < 1e-4
-
-
 def test_scd2_from_events_collapses_and_bounds_intervals(spark):
     """SCD-2 build: same-value runs collapse into one version, version
     numbering restarts per key, valid_to chains to the next version's
@@ -1380,10 +1344,10 @@ def test_release_materialized_drops_checkpoint_blocks(spark):
     session fully usable for new queries."""
     from pyspark.sql import functions as F
 
-    from cdc_makanmana_spark.operators.dedup import _materialize
+    from cdc_makanmana_spark.session import materialize
     from cdc_makanmana_spark.session import release_materialized
 
-    df = _materialize(spark.range(1000).withColumn("k", F.col("id") % 7))
+    df = materialize(spark.range(1000).withColumn("k", F.col("id") % 7))
     assert df.count() == 1000
     stored = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     assert len(stored) >= 1  # the checkpoint is holding blocks

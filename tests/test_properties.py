@@ -55,21 +55,22 @@ def test_winnowing_containment_property(spark, texts):
     """The winnowing guarantee on arbitrary word soup: a text embedded
     inside a padded container shares at least one fingerprint with the
     container whenever the shared run reaches k + window - 1 words."""
-    from cdc_makanmana_spark.functions.text import winnowing_fingerprints
+    from cdc_makanmana_spark.operators.dedup import winnowing_fingerprint_rows
 
     pad = " ".join(["pad%d" % i for i in range(8)])
-    rows = [(i, t, f"{pad} {t} {pad}") for i, t in enumerate(texts) if t.strip()]
-    if not rows:
+    texts = [t for t in texts if t.strip()]
+    if not texts:
         return
-    df = spark.createDataFrame(rows, "i long, t string, padded string")
-    out = df.select(
-        "i",
-        winnowing_fingerprints("t", k=5, window=4).alias("fp_t"),
-        winnowing_fingerprints("padded", k=5, window=4).alias("fp_p"),
-    ).collect()
-    for r, (_, t, _) in zip(out, rows):
+    # text i is id 2i, its padded container id 2i + 1
+    rows = [(2 * i, t) for i, t in enumerate(texts)]
+    rows += [(2 * i + 1, f"{pad} {t} {pad}") for i, t in enumerate(texts)]
+    df = spark.createDataFrame(rows, "i long, t string")
+    fps = {}
+    for r in winnowing_fingerprint_rows(df, "t", "i", k=5, window=4).collect():
+        fps.setdefault(r.i, set()).add(r.fp)
+    for i, t in enumerate(texts):
         if len(t.split()) >= 8:
-            assert set(r.fp_t) & set(r.fp_p)
+            assert fps[2 * i] & fps[2 * i + 1]
 
 
 @given(
@@ -175,11 +176,12 @@ def test_decontaminate_sound_and_idempotent_property(spark, texts, ev_texts):
 
 @given(texts=_texts)
 @settings(max_examples=6, deadline=None)
-def test_dedup_against_corpus_soundness_property(spark, texts):
-    """Every surviving batch doc is genuinely novel: no corpus doc has
-    the same normalized content, and no corpus doc clears the Jaccard
-    threshold against it (checked by brute force)."""
-    from cdc_makanmana_spark.operators.dedup import dedup_against_corpus
+def test_dedup_against_corpus_soundness_property(spark, tmp_path_factory, texts):
+    """Every batch doc that survives SignatureIndex dedup is genuinely
+    novel: no corpus doc has the same normalized content, and no
+    corpus doc clears the Jaccard threshold against it (checked by
+    brute force). Each example indexes its corpus in a fresh dir."""
+    from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
 
     rows = list(enumerate(texts))
     batch = spark.createDataFrame(
@@ -189,7 +191,9 @@ def test_dedup_against_corpus_soundness_property(spark, texts):
         [(i, t) for i, t in rows if i % 2 == 1] or [(999, "corpus seed text")],
         "id long, text string",
     )
-    kept = {r["id"] for r in dedup_against_corpus(batch, corpus, "text", "id", threshold=0.8).collect()}
+    idx = SignatureIndex(spark, str(tmp_path_factory.mktemp("sigidx")), id_col="id")
+    idx.append(corpus, batch_id=0)
+    kept = {r["id"] for r in idx.dedup_batch(batch, threshold=0.8).collect()}
 
     def norm(t):
         return " ".join(t.lower().split())

@@ -431,11 +431,11 @@ def test_streaming_decontamination_foreach_batch(spark, tmp_path):
 def test_streaming_incremental_ingest_dedup_against_landed_corpus(spark, tmp_path):
     """The growing-corpus ingest pipeline end-to-end: each arriving
     micro-batch is deduped against everything ALREADY LANDED
-    (dedup_against_corpus inside foreachBatch), survivors append to the
-    corpus, and later batches dedup against earlier batches' survivors
-    — exact dups, near dups, and cross-batch dups all die; novel docs
-    accumulate."""
-    from cdc_makanmana_spark.operators.dedup import dedup_against_corpus
+    (SignatureIndex.ingest as the foreachBatch body), survivors land
+    in the corpus, and later batches dedup against earlier batches'
+    survivors — exact dups, near dups, and cross-batch dups all die;
+    novel docs accumulate."""
+    from cdc_makanmana_spark.operators.dedup_index import SignatureIndex
 
     doc_schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
@@ -448,17 +448,14 @@ def test_streaming_incremental_ingest_dedup_against_landed_corpus(spark, tmp_pat
     B = "a second unrelated piece concerning columnar storage layouts and encodings"
     C = "fresh third content mentioning watermarks and state store eviction policies"
 
-    def ingest(batch_df, batch_id):
-        import os
+    idx = SignatureIndex(spark, str(tmp_path / "idx"), id_col="doc_id")
 
-        if os.path.isdir(corpus) and any(
-            f.endswith(".parquet") for f in os.listdir(corpus)
-        ):
-            existing = spark.read.schema(doc_schema).parquet(corpus)
-            keep = dedup_against_corpus(batch_df, existing, "text", "doc_id")
-        else:
-            keep = batch_df
-        keep.write.mode("append").parquet(corpus)
+    def ingest(batch_df, batch_id):
+        # per-batch corpus dir: the sink is idempotent per batch_id,
+        # as ingest's retry contract asks of its caller
+        idx.ingest(batch_df, batch_id).write.mode("overwrite").parquet(
+            f"{corpus}/b{batch_id}"
+        )
 
     def run_once():
         q = (
@@ -486,7 +483,7 @@ def test_streaming_incremental_ingest_dedup_against_landed_corpus(spark, tmp_pat
     ])
     run_once()
 
-    landed = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
+    landed = sorted(r["doc_id"] for r in spark.read.parquet(f"{corpus}/b*").collect())
     assert landed == [1, 2, 5]
 
 
